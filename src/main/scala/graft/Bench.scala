@@ -1,9 +1,12 @@
 package graft
+
+import graft.obs.Profile
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional args: run only the named queries, repeated REPS times
-    // (local profiling loop); the driver passes none and gets the suite
+    // (the profiling loop, README "Profiling"); none runs the whole suite
     val only = args.toSet
     // default 2 passes: every query then has ≥2 samples, so the spread /
     // noise fields in the artifact always measure something (one pass
@@ -67,16 +70,14 @@ object Bench {
     // Returns None on failure so a query that throws instantly cannot
     // masquerade as an implausibly fast sample in the per-query min.
     def once(name: String,
-        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: $e"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
+        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Profile] = {
+      val p =
+        try Some(Profile.record(spark)(fn(spark, sfDir).count())._2)
+        catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: $e"); None }
       // queries may persist() intermediates; drop them so later queries
       // are measured against a clean executor, not a filling heap
       spark.catalog.clearCache()
-      if (ok) Some(dt) else None
+      p
     }
 
     // This host shows documented hypervisor stalls (20-30x wall-clock
@@ -90,22 +91,26 @@ object Bench {
     // shows as a wide min→median gap on unchanged queries — a regression
     // shows as a moved min).
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
-    def record(name: String, t: Double): Unit =
-      samples(name) = samples.getOrElse(name, Nil) :+ t
+    // the profile of the sample that set each query's min
+    val profiles = scala.collection.mutable.Map.empty[String, Profile]
+    def minOf(name: String): Double =
+      samples.get(name).map(_.min).getOrElse(Double.MaxValue)
+    def record(name: String, p: Profile): Unit = {
+      if (p.wallS < minOf(name)) profiles(name) = p
+      samples(name) = samples.getOrElse(name, Nil) :+ p.wallS
+    }
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     for (_ <- 0 until reps; (name, fn) <- selected) {
       once(name, fn) match {
-        case Some(t) => record(name, t)
+        case Some(p) => record(name, p)
         case None    => if (!samples.contains(name)) failed += name
       }
     }
-    def minOf(name: String): Double =
-      samples.get(name).map(_.min).getOrElse(Double.MaxValue)
     val retryBars = Seq(1.0, 2.5, 6.0, 15.0)
     for (bar <- retryBars) {
       for ((name, fn) <- selected if minOf(name) > bar)
-        once(name, fn).foreach { t =>
-          record(name, t)
+        once(name, fn).foreach { p =>
+          record(name, p)
           failed -= name
         }
     }
@@ -178,8 +183,10 @@ object Bench {
         ",\"hot_host\":" + hotHost +
         ",\"loadavg_before\":\"" + loadBefore + "\"" +
         ",\"loadavg_after\":\"" + loadAfter + "\"}"
+    val profileJson = samples.keys.toSeq
+      .map(k => "\"" + k + "\":" + profiles(k).json).mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"calibration":$calJson,"queries":$qs,"spread":$spreadJson,"noise":$noise,"failed":$failedJson,"sf":"$sfDir","scaled":$scaledJson}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"calibration":$calJson,"queries":$qs,"spread":$spreadJson,"noise":$noise,"failed":$failedJson,"sf":"$sfDir","scaled":$scaledJson,"profile":$profileJson}"""
     // The driver captures only a bounded stdout tail (the r4 artifact shows a
     // 2000-char window); a 70-query single-line JSON outgrew it and arrived
     // unparseable. So: the COMPLETE per-query metrics go to a file next to the

@@ -129,8 +129,6 @@ object Dedupe {
           var extra = 0L
           rows.foreach(_ => extra += 1)
           skB.add(1); skR.add(ids.length + extra)
-          System.err.println(s"[dedupe] LSH bucket band=${key._1} over cap " +
-            s"($maxBucket): ${ids.length + extra} rows skipped")
           Iterator.empty
         }
         else {
@@ -242,9 +240,6 @@ object Dedupe {
           var extra = 0L
           rows.foreach(_ => extra += 1)
           skB.add(1); skR.add(docs.length + extra)
-          System.err.println(s"[dedupe] SimHash bucket band=$band " +
-            s"byte=${key._2} over cap ($maxBucket): " +
-            s"${docs.length + extra} rows skipped")
           Iterator.empty
         }
         else {

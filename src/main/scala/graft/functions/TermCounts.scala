@@ -53,8 +53,7 @@ object TermCounts {
     while (i <= bytes.length) {
       if (i == bytes.length || bytes(i) == ' '.toByte) {
         val tok = UTF8String.fromBytes(bytes, start, i - start)
-        val prev = m.get(tok)
-        m.put(tok, if (prev == null) 1L else prev + 1L)
+        m.put(tok, m.getOrDefault(tok, 0L) + 1L)
         start = i + 1
       }
       i += 1

@@ -27,33 +27,25 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
   private val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
   val tags = new Tags(fs, root)
 
-  // phase timing for the optimization loop (SPARK_GRAFT_STORE_TIMING=1):
-  // separates the write jobs from the driver-side commit protocol
-  private val storeTiming = sys.env.contains("SPARK_GRAFT_STORE_TIMING")
-  private def timed[A](name: String)(body: => A): A =
-    if (!storeTiming) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[store-timing] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.3fs")
-      r
-    }
-
   def version: Long = Manifest.currentVersion(fs, root)
 
-  /** S1: raw physical rows of a snapshot — tombstones and pre-merge
-    * duplicates included. Deliberately a plain file scan so predicates and
-    * projections push all the way to parquet row-group stats.
+  /** A plain parquet scan of the given manifest files (paths relative to
+    * the root, partition columns recovered through `basePath`), or an
+    * empty frame of the statement schema when there are none.
     */
-  def rawAt(v: Long): DataFrame = {
-    val files = Manifest.liveFiles(fs, root, v)
+  private def readFiles(files: Iterable[String]): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Statement.schema)
     else
       spark.read.schema(Statement.schema)
         .option("basePath", root.toString)
         .parquet(files.toSeq.sorted.map(f => s"$rootStr/$f"): _*)
-  }
+
+  /** S1: raw physical rows of a snapshot — tombstones and pre-merge
+    * duplicates included. Deliberately a plain file scan so predicates and
+    * projections push all the way to parquet row-group stats.
+    */
+  def rawAt(v: Long): DataFrame = readFiles(Manifest.liveFiles(fs, root, v))
 
   def raw: DataFrame = rawAt(-1L)
 
@@ -72,13 +64,7 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
     val v = version
     val files = Manifest.liveFiles(fs, root, v)
     val stats = Manifest.liveStats(fs, root, v)
-    val keep = files.filter(f => stats.get(f).forall(_ >= cutoffMicros))
-    if (keep.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Statement.schema)
-    else
-      spark.read.schema(Statement.schema)
-        .option("basePath", root.toString)
-        .parquet(keep.toSeq.sorted.map(f => s"$rootStr/$f"): _*)
+    readFiles(files.filter(f => stats.get(f).forall(_ >= cutoffMicros)))
   }
 
   /** Change data feed between two snapshots: the row-level delta —
@@ -108,18 +94,10 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
     // empty-side DataFrame follows the declared order — and `except`
     // aligns by position, so without the select a one-sided diff would
     // compare shifted columns (fragment against external, …)
-    def readFiles(files: Set[String]): DataFrame = {
-      val df =
-        if (files.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Statement.schema)
-        else spark.read.schema(Statement.schema)
-          .option("basePath", root.toString)
-          .parquet(files.toSeq.sorted.map(f => s"$rootStr/$f"): _*)
-      df.select(Statement.columns.map(col): _*)
-    }
-    val added = readFiles(newFiles -- oldFiles)
-    val removed = readFiles(oldFiles -- newFiles)
+    def side(files: Set[String]): DataFrame =
+      readFiles(files).select(Statement.columns.map(col): _*)
+    val added = side(newFiles -- oldFiles)
+    val removed = side(oldFiles -- newFiles)
     // One-pass symmetric difference: tag each side and aggregate per-side
     // presence over the union — a single map-side-combinable shuffle, one
     // scan per side. The two-`except` form costs four shuffle legs
@@ -175,7 +153,7 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
       .sortWithinPartitions((Statement.partitionColumns.map(col) ++ sortCols): _*)
       .write.partitionBy(Statement.partitionColumns: _*)
     compression.foreach(c => writer.option("compression", c))
-    timed("staged write job")(writer.mode("overwrite").parquet(stage.toString))
+    writer.mode("overwrite").parquet(stage.toString)
     val stageBase = stage.toUri.getPath.stripSuffix("/")
     val moves = scala.collection.mutable.ArrayBuffer.empty[(Path, Path, String)]
     val it = fs.listFiles(stage, true)
@@ -197,13 +175,13 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = FsOps.driverIoPool
-    timed("staged moves")(Await.result(
+    Await.result(
       Future.traverse(moves.toSeq) { case (src, dest, rel) =>
         Future {
           if (!FsOps.rename(fs, src, dest))
             throw new IllegalStateException(s"staged write move failed: $rel")
         }
-      }, Duration.Inf))
+      }, Duration.Inf)
     fs.delete(stage, true)
     moves.map(_._3).toSet
   }
@@ -219,7 +197,7 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
     * time), merged with the carried-over files' existing entries so a
     * commit never degrades older files' skipping stats.
     */
-  private def statsFor(fresh: Set[String]): Map[String, Long] = timed("footer stats") {
+  private def statsFor(fresh: Set[String]): Map[String, Long] = {
     val conf = spark.sessionState.newHadoopConf()
     // footer opens are independent driver-side IO — run them on a bounded
     // pool (serial opens dominate commit latency once a batch spans many
@@ -233,7 +211,7 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
       }, Duration.Inf).flatten.toMap
   }
 
-  def append(df: DataFrame): Long = timed("append lock+commit")(Locks.withLock(fs, root) {
+  def append(df: DataFrame): Long = Locks.withLock(fs, root) {
     val fresh = writeStaged(df,
       Statement.appendSortColumns.map(col) :+ col("last_seen").desc)
     // one dirty stamp per append (a batch file listing the touched
@@ -241,10 +219,9 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
     // that's one object-store PUT per commit instead of hundreds
     tags.put(s"dirty/${java.util.UUID.randomUUID().toString}",
       fresh.map(partitionOf).toSeq.sorted.mkString("\n"))
-    val (liveSet, liveStats) = timed("manifest liveState")(Manifest.liveState(fs, root))
-    timed("manifest commit")(Manifest.commit(fs, root, liveSet ++ fresh, "append",
-      liveStats ++ statsFor(fresh)))
-  })
+    val (liveSet, liveStats) = Manifest.liveState(fs, root)
+    Manifest.commit(fs, root, liveSet ++ fresh, "append", liveStats ++ statsFor(fresh))
+  }
 
   /** Default tombstone grace: 30 days, like the reference
     * (core/settings.py:31) — tombstones younger than this survive the
@@ -277,9 +254,7 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
       // on a key subset satisfies the windows' clustered distribution) and
       // the partitioned write — no per-branch re-shuffle, no pre-write
       // repartition.
-      val scoped = spark.read.schema(Statement.schema)
-        .option("basePath", root.toString)
-        .parquet(dirtyFiles.toSeq.sorted.map(f => s"$rootStr/$f"): _*)
+      val scoped = readFiles(dirtyFiles)
         .repartition(Statement.partitionColumns.map(col): _*)
       val cutoff = graceCutoff.getOrElse(
         current_timestamp() - expr(s"INTERVAL $DefaultGraceDays DAYS"))
@@ -420,9 +395,7 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
       Statement.partitionColumns.map(c =>
         coalesce(col(c).cast("string"), lit("__HIVE_DEFAULT_PARTITION__"))): _*)
     val fresh = smallByPartition.keys.groupBy(bucketOf).flatMap { case (bucket, parts) =>
-      val files = parts.flatMap(smallByPartition).toSeq.sorted
-      val base = spark.read.schema(Statement.schema).option("basePath", root.toString)
-        .parquet(files.map(f => s"$rootStr/$f"): _*)
+      val base = readFiles(parts.flatMap(smallByPartition))
       val packed =
         if (zorderBy.isEmpty)
           // deterministic per-partition salt spreads a large backlog over

@@ -42,8 +42,6 @@ object Xref {
           var extra = 0L
           rows.foreach(_ => extra += 1)
           skB.add(1); skR.add(ids0.length + extra)
-          System.err.println(s"[xref] blocking key `$block` over cap " +
-            s"($maxBlock): ${ids0.length + extra} entities skipped")
           Iterator.empty
         }
         else {

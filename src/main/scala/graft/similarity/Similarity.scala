@@ -392,8 +392,6 @@ object Similarity {
           var extra = 0L
           rows.foreach(_ => extra += 1)
           skB.add(1); skR.add(vs0.length + extra)
-          System.err.println(s"[similarity] block $block over cap " +
-            s"($maxBlock): ${vs0.length + extra} rows skipped")
           Iterator.empty
         }
         else {
@@ -451,8 +449,6 @@ object Similarity {
           var extra = 0L
           rows.foreach(_ => extra += 1)
           skB.add(1); skR.add(vs0.length + extra)
-          System.err.println(s"[similarity] semdedup cluster $cid over cap " +
-            s"($DefaultMaxBlock): prune skipped, all kept")
           Iterator.empty
         }
         else {

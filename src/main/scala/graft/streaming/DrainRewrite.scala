@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Drain-mode rewrite for AvailableNow streaming queries whose drained
   * result provably equals a batch plan.
   *
-  * The round-12 DrainProfile numbers showed st5's ×100 drain cost IS the
+  * The stream block of st5's ×100 profile record ([[graft.obs.Profile]],
+  * run with the rewrite off) showed its drain cost IS the
   * state-store insert of the full in-window set (3.97M rows / 1.04 GB,
   * 41.7 task-sec of update inside one addBatch) — a cost the
   * exactly-once machinery mandates for RESUMABLE streams, but pure waste

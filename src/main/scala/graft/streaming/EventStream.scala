@@ -186,8 +186,8 @@ object EventStream {
     * `spark.graft.stream.drainRewrite`): a fresh-checkpoint single-batch
     * AvailableNow drain of an INNER join equals the batch join exactly
     * (every match forms inside the one batch; the watermark only evicts
-    * state afterwards), and the round-12 DrainProfile decomposition
-    * showed the stateful drain's cost at ×100 IS the state-store insert
+    * state afterwards), and the stream block of the profile record
+    * ([[graft.obs.Profile]]) showed the stateful drain's cost at ×100 IS the state-store insert
     * of the full in-window set — buffering 1 GB of rows to read them
     * back once. The rewrite runs the same projections/condition over the
     * batch read, materializes, and marks the checkpoint spent; resumable
@@ -259,7 +259,6 @@ object EventStream {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    DrainMetrics.capture(q)
     intervalJoinProject(ss.table(name))
   }
 

@@ -70,8 +70,8 @@ object SketchStream {
 
   def countMinStreaming(spark: SparkSession, dir: String,
       width: Int = 1024): DataFrame = {
-    // ONE-SHOT drains take the [[DrainRewrite]] fast path: the round-12
-    // DrainProfile decomposition showed this drain's residual cost is
+    // ONE-SHOT drains take the [[DrainRewrite]] fast path: the stream
+    // block of this drain's profile record showed its residual cost is
     // pure stream lifecycle (ZERO state-store rows — the cells live in
     // the agg), plus the __batch partition round-trip. CMS linearity
     // makes the twin trivially exact: the single batch IS the table, so
@@ -112,7 +112,6 @@ object SketchStream {
       }
       .start()
     q.awaitTermination()
-    DrainMetrics.capture(q)
     ss.read.parquet(stateDir)
       .groupBy(col("row"), col("bucket")).agg(sum(col("n")).as("n"))
   }

@@ -124,6 +124,11 @@ object Bpe {
     * Tokens are interned to dense ints (pair keys pack into one Long);
     * string comparisons happen only on count ties among winner
     * candidates.
+    *
+    * Precondition: `pos` is non-null in every row (it is read as a
+    * primitive int). tok2's staged token table derives it from
+    * `posexplode`, so it always is; a null `pos` throws instead of being
+    * ordered.
     */
   def localSummary(rows: Iterator[Row], nRounds: Int): Iterator[Row] = {
     val ordS = graft.graph.GraphLocal.orderingFor(

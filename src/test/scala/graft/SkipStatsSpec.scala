@@ -56,18 +56,30 @@ class SkipStatsSpec extends SparkSpec {
     assert(dr == 16, s"expected 16 skipped rows (4 per band), got $dr")
   }
 
+  // one hot blocking key over a cap of 3, one cold key under it
+  private def xrefKeys = Seq(
+    ("hot", "e1"), ("hot", "e2"), ("hot", "e3"), ("hot", "e4"),
+    ("cold", "e8"), ("cold", "e9")).toDF("blk", "eid")
+
   test("xref mega-block skips are counted and do not abort other blocks") {
-    val keys = Seq(
-      ("hot", "e1"), ("hot", "e2"), ("hot", "e3"), ("hot", "e4"),
-      ("cold", "e8"), ("cold", "e9")).toDF("blk", "eid")
     val (db, dr) = delta("xref") {
-      val cand = graft.ops.Xref.candidates(keys, "blk", "eid",
+      val cand = graft.ops.Xref.candidates(xrefKeys, "blk", "eid",
         maxBlock = 3, minShared = 1)
       // the cold block still pairs; the hot block is dropped
       assert(cand.select("id_a", "id_b").as[(String, String)].collect().toSet ==
         Set(("e8", "e9")))
     }
     assert(db == 1 && dr == 4, s"got ($db, $dr)")
+  }
+
+  test("the profile record's skip deltas equal the counters' (xref hot key)") {
+    var p: graft.obs.Profile = null
+    val (db, dr) = delta("xref") {
+      p = graft.obs.Profile.record(spark)(graft.ops.Xref.candidates(xrefKeys, "blk", "eid",
+        maxBlock = 3, minShared = 1).count())._2
+    }
+    assert((db, dr) == ((1L, 4L)))
+    assert(p.skips == Map("xref.skipped_buckets" -> db, "xref.skipped_rows" -> dr), p.json)
   }
 
   test("embedding mega-block skips are counted") {

@@ -134,8 +134,9 @@ out = {
         'artifacts, not engine cost: st5/sk3 happen to have sub-second '
         'DuckDB twins (0.63 s / 0.55 s at x100) where rj1/sk1 oracles '
         'take 7.2 s / 1.9 s for the same-band Spark work. The stateful '
-        'floor for resumable deployments stays metrics-documented via '
-        'graft.tools.DrainProfile.'),
+        'floor for resumable deployments stays metrics-documented in the '
+        'stream block of each query\'s profile record (BENCH_full.json '
+        '"profile", run with spark.graft.stream.drainRewrite=false).'),
     'merge_form_note': (
         'ROUND 14: A1 merge is deliberately the one-pass WINDOW form. '
         'The skew-safe aggregation alternative (per-id min_by + '
