@@ -65,12 +65,13 @@ object Sessions {
       .config("spark.hadoop.fs.file.impl", "graft.lake.FastLocalFileSystem")
       .config("spark.ui.enabled", "false")
     // A/B experiment hook: arbitrary conf overrides without a code edit
-    // (e.g. SPARK_GRAFT_EXTRA_CONF="spark.graft.graph.localBytes=0" to
-    // force the distributed branch of an observed-small fast path for a
-    // before/after plan dump or a gate-crossover sweep). Applied LAST so
-    // they win over the defaults above; production deployments pass real
-    // conf files instead. Known limitation (debug hook, not a config
-    // surface): entries split on ';' with no escaping, so a conf VALUE
+    // (e.g. SPARK_GRAFT_EXTRA_CONF="spark.graft.path=distributed" to
+    // force every local kernel and batch twin to its distributed or
+    // stateful side, see graft.exec.PathChoice, for a before/after plan
+    // dump or bench). Applied LAST so they win over the defaults above;
+    // production deployments pass real conf files instead. Known
+    // limitation (debug hook, not a config surface): entries split on
+    // ';' with no escaping, so a conf VALUE
     // containing a semicolon cannot be expressed here — it would split
     // into a bogus entry and fail the key=value require below.
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq

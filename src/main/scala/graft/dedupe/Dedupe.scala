@@ -464,33 +464,27 @@ object Dedupe {
   def dupClusters(pairs: DataFrame, maxRounds: Int = 16,
       shortcutFrom: Int = 4, failOnNonConvergence: Boolean = true): DataFrame = {
     import graft.functions.F
-    import graft.graph.{EntityGraph, GraphLocal}
-    // Observed-small fast path (the kCore precedent, EntityGraph.kCore's
-    // localPeel): when the pair table measures small — exact file bytes
-    // when it is a plain scan of a staged table, else the staged star's
-    // file size below; driver metadata either way, no extra job — the
-    // whole label propagation loop (2 jobs per round: propagate +
-    // shortcut-stage) collapses to ONE executor-local union-find task.
-    // The output is the same fixpoint by construction: label = exact
-    // component min under Spark's own ordering for the id type (longs
-    // natural, strings unsigned UTF-8 bytes — UTF8String order; the
-    // pairs' endpoints ARE the star's node set, so skipping the star
-    // write changes nothing). At 100 TB the pair graph dwarfs the
-    // threshold and the distributed loop below runs unchanged; the gate
-    // is data-size-adaptive, not core-count-tuned. Executor-local, not
-    // a driver collect.
+    import graft.exec.PathChoice
+    import graft.graph.GraphLocal
+    // Local kernel (PathChoice.Components): the whole label propagation
+    // loop (2 jobs per round: propagate + shortcut-stage) collapses to
+    // ONE executor-local union-find task. The output is the same
+    // fixpoint by construction: label = exact component min under
+    // Spark's own ordering for the id type (longs natural, strings
+    // unsigned UTF-8 bytes — UTF8String order). A plain scan of a staged
+    // table is measured as is (the pairs' endpoints ARE the star's node
+    // set, so skipping the star write changes nothing); any other input
+    // is measured by the staged star below (one unavoidable stage write,
+    // then one local task).
     val nodeType = pairs.schema("id_a").dataType
     val ordOpt = GraphLocal.orderingFor(nodeType)
-    def localCc(edgeRows: DataFrame): DataFrame = {
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", nodeType),
-        org.apache.spark.sql.types.StructField("cluster_id", nodeType)))
-      edgeRows.coalesce(1)
-        .mapPartitions(it => GraphLocal.localComponents(it, ordOpt.get))(
-          org.apache.spark.sql.Encoders.row(outSchema))
-    }
-    if (ordOpt.isDefined && F.isPlainScan(pairs) &&
-        EntityGraph.smallEnoughForLocal(Seq(pairs)))
+    def localCc(edgeRows: DataFrame): DataFrame =
+      PathChoice.kernel(edgeRows, new org.apache.spark.sql.types.StructType()
+        .add("doc_id", nodeType).add("cluster_id", nodeType))(
+        it => GraphLocal.localComponents(it, ordOpt.get))
+    val pairsScan = F.isPlainScan(pairs)
+    if (ordOpt.isDefined && pairsScan &&
+        PathChoice.local(PathChoice.Components, Seq(pairs), PathChoice.LocalBytes))
       return localCc(pairs.select(col("id_a"), col("id_b")))
     // the "star": both edge directions plus a self-loop per node. The
     // self-loop makes every round a single join + single aggregation — the
@@ -500,9 +494,8 @@ object Dedupe {
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
     val star = F.materialize(undirected.unionByName(
       undirected.select(col("src")).distinct().withColumn("dst", col("src"))))
-    // non-scan inputs reach the same fast path through the staged star's
-    // exact file size (one unavoidable stage write, then one local task)
-    if (ordOpt.isDefined && EntityGraph.smallEnoughForLocal(Seq(star)))
+    if (ordOpt.isDefined && !pairsScan &&
+        PathChoice.local(PathChoice.Components, Seq(star), PathChoice.LocalBytes))
       return localCc(star)
     // round 1 fused into initialization: label = min(self, neighbors)
     var labels = F.materialize(

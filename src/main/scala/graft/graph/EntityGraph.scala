@@ -2,7 +2,9 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
+import graft.exec.PathChoice
 import graft.functions.F
 
 /** Entity-graph analytics over the statement lake's natural graph shape.
@@ -28,40 +30,16 @@ import graft.functions.F
   */
 object EntityGraph {
 
-  /** Size gate for the executor-local fast paths: every input's
-    * optimizer size estimate (for staged parquet / plain scans this is
-    * the actual file size — driver metadata, no job) must fit under
-    * `spark.graft.graph.localBytes` (default 32 MB ≈ 2-3M zstd edge
-    * rows, the same working-set band as kCore's 2M-edge gate). Non-scan
-    * inputs carry conservative (over-)estimates, so the gate fails
-    * safe toward the distributed path. At 100 TB the staged edge
-    * artifacts are orders of magnitude past the gate.
-    */
-  private[graft] def smallEnoughForLocal(inputs: Seq[DataFrame],
-      confKey: String = "spark.graft.graph.localBytes",
-      defaultBytes: Long = 32L << 20): Boolean = {
-    val conf = inputs.head.sparkSession.conf
-    val localBytes = conf.get(confKey,
-      conf.get("spark.graft.graph.localBytes", defaultBytes.toString)).toLong
-    inputs.forall(
-      _.queryExecution.optimizedPlan.stats.sizeInBytes <= localBytes)
-  }
-
-  /** The rank kernels do `iters×` more single-task work per edge than
-    * union-find/BFS, and the distributed iteration parallelizes that
-    * work well — measured crossover on this class of graph: local wins
-    * at ~2 MB of staged edges (1.0 s vs 1.6-3.0 s), loses 2× at ~30 MB
-    * (6.6 s vs 3.0 s at ×10). 8 MB keeps the win and cedes the loss;
-    * override via spark.graft.graph.localBytes.rank.
-    */
-  private val RankLocalKey = "spark.graft.graph.localBytes.rank"
-  private val RankLocalDefault = 8L << 20
-
   private def rankSchema(e0: DataFrame) =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", e0.schema("src").dataType),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.LongType)))
+    new StructType().add("node", e0.schema("src").dataType).add("rank", LongType)
+
+  /** Edge rows (src, dst, __seed = false) plus one (node, null, true)
+    * row per seed: the input of the seeded local kernels.
+    */
+  private def seedTagged(e0: DataFrame, seeds: DataFrame): DataFrame =
+    e0.select(col("src"), col("dst"), lit(false).as("__seed"))
+      .unionAll(seeds.select(col("node").as("src"),
+        lit(null).cast(e0.schema("src").dataType).as("dst"), lit(true).as("__seed")))
 
   /** Distinct directed edge list (src, dst) from the order fact chain:
     * customer `c<custkey>` → supplier `s<suppkey>` for every distinct
@@ -115,27 +93,16 @@ object EntityGraph {
     // staged file twice (cheap columnar read), and the staged bytes are
     // half of what writing the undirected table would cost.
     val e0 = F.materializeIfNeeded(edges)
-    // Observed-small fast path (kCore's localPeel precedent): when edges
-    // AND seeds measure small by driver-side file-size metadata, the
-    // whole per-hop loop (join + distinct + anti-join + stage write per
-    // hop) collapses to ONE executor-local BFS task over a tagged union
-    // of edge and seed rows — identical min-hop output by construction.
-    // At scale the byte gate fails and the staged frontier loop below
-    // runs unchanged.
+    // Local kernel (PathChoice.Expand): the whole per-hop loop (join +
+    // distinct + anti-join + stage write per hop) collapses to ONE
+    // executor-local BFS task over the seed-tagged edge rows — identical
+    // min-hop output by construction.
     val nodeType = e0.schema("src").dataType
-    if (smallEnoughForLocal(Seq(e0, seeds)) &&
-        GraphLocal.orderingFor(nodeType).isDefined) {
-      val tagged = e0.select(col("src"), col("dst"), lit(false).as("__seed"))
-        .unionAll(seeds.select(col("node").as("src"),
-          lit(null).cast(nodeType).as("dst"), lit(true).as("__seed")))
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("hop",
-          org.apache.spark.sql.types.IntegerType)))
-      return tagged.coalesce(1)
-        .mapPartitions(it => GraphLocal.localBfs(it, maxHops))(
-          org.apache.spark.sql.Encoders.row(outSchema))
-    }
+    if (GraphLocal.orderingFor(nodeType).isDefined &&
+        PathChoice.local(PathChoice.Expand, Seq(e0, seeds), PathChoice.LocalBytes))
+      return PathChoice.kernel(seedTagged(e0, seeds),
+        new StructType().add("node", nodeType).add("hop", IntegerType))(
+        it => GraphLocal.localBfs(it, maxHops))
     val und = undirected(e0)
     val seed0 = F.materialize(
       seeds.select(col("node")).distinct().withColumn("hop", lit(0)))
@@ -187,18 +154,15 @@ object EntityGraph {
     // the upstream join+distinct would be inlined and re-executed up to
     // four times in the edgesDeg job.
     val e0 = F.materializeIfNeeded(edges)
-    // Observed-small fast path: the integer-exact recurrence (Long sums,
-    // truncating division — associative, order-free) replays bit-identically
-    // in one executor-local task, skipping the edgesDeg stage write and
-    // the per-iteration join chain (see GraphLocal.localPageRank). The
-    // byte gate is driver metadata on the staged/scanned file; at scale
-    // the distributed iteration below runs unchanged.
-    if (smallEnoughForLocal(Seq(e0), RankLocalKey, RankLocalDefault) &&
-        GraphLocal.orderingFor(e0.schema("src").dataType).isDefined) {
-      return e0.select(col("src"), col("dst")).coalesce(1)
-        .mapPartitions(it => GraphLocal.localPageRank(it, iters, seeded = false))(
-          org.apache.spark.sql.Encoders.row(rankSchema(e0)))
-    }
+    // Local kernel (PathChoice.PageRank): the integer-exact recurrence
+    // (Long sums, truncating division — associative, order-free) replays
+    // bit-identically in one executor-local task, skipping the edgesDeg
+    // stage write and the per-iteration join chain (see
+    // GraphLocal.localPageRank).
+    if (GraphLocal.orderingFor(e0.schema("src").dataType).isDefined &&
+        PathChoice.local(PathChoice.PageRank, Seq(e0), PathChoice.RankLocalBytes))
+      return PathChoice.kernel(e0.select(col("src"), col("dst")), rankSchema(e0))(
+        it => GraphLocal.localPageRank(it, iters, seeded = false))
     val und = undirected(e0)
     val deg = degrees(e0).withColumnRenamed("degree", "d")
     // (src, dst, d_src) staged once — reused by every iteration
@@ -252,20 +216,14 @@ object EntityGraph {
     val S = 1000000000L
     val base = S * 15L / 100L
     val e0 = F.materializeIfNeeded(edges)
-    // same observed-small single-task replay as pageRank, with the seed
-    // set riding the same tagged union the BFS fast path uses (seeds
-    // outside the node set drop out exactly like the distributed
+    // same single-task replay as pageRank, over the seed-tagged edge rows
+    // (seeds outside the node set drop out exactly like the distributed
     // node-set join)
-    if (smallEnoughForLocal(Seq(e0, seeds), RankLocalKey, RankLocalDefault) &&
-        GraphLocal.orderingFor(e0.schema("src").dataType).isDefined) {
-      val nodeType = e0.schema("src").dataType
-      val tagged = e0.select(col("src"), col("dst"), lit(false).as("__seed"))
-        .unionAll(seeds.select(col("node").as("src"),
-          lit(null).cast(nodeType).as("dst"), lit(true).as("__seed")))
-      return tagged.coalesce(1)
-        .mapPartitions(it => GraphLocal.localPageRank(it, iters, seeded = true))(
-          org.apache.spark.sql.Encoders.row(rankSchema(e0)))
-    }
+    if (GraphLocal.orderingFor(e0.schema("src").dataType).isDefined &&
+        PathChoice.local(PathChoice.PersonalizedPageRank, Seq(e0, seeds),
+          PathChoice.RankLocalBytes))
+      return PathChoice.kernel(seedTagged(e0, seeds), rankSchema(e0))(
+        it => GraphLocal.localPageRank(it, iters, seeded = true))
     val und = undirected(e0)
     val deg = degrees(e0).withColumnRenamed("degree", "d")
     val edgesDeg = F.materialize(
@@ -364,27 +322,21 @@ object EntityGraph {
     // measured over kCore's stageEvery variants), while a genuinely big
     // graph runs one staged round per job so the shrinking table is
     // scanned once per peel and lineage stays flat.
-    val small = degSum / 2 <= 2_000_000L
-    // Observed-small fast path: the remaining subgraph is dimension-
-    // sized (a thresholded projection, not the corpus), so the capped
-    // synchronous peel runs as ONE single-partition task instead of
-    // maxRounds/blockLen distributed jobs — at 100 TB a 1000-executor
-    // cluster should not run 8 synchronized BSP rounds over a graph
-    // that fits one task's working set. The local rounds replicate the
-    // distributed semantics EXACTLY (survivors decided on pre-round
+    val small = degSum / 2 <= PathChoice.KCoreLocalEdges
+    // Local kernel (PathChoice.KCore): the remaining subgraph is
+    // dimension-sized (a thresholded projection, not the corpus), so the
+    // capped synchronous peel runs as ONE single-partition task instead
+    // of maxRounds/blockLen distributed jobs. The local rounds replicate
+    // the distributed semantics EXACTLY (survivors decided on pre-round
     // degrees, decrements to same-round-dropped nodes ignored, round
     // cap, final ≥ k filter), so the two branches — and the fixed-round
-    // oracle — agree bit for bit. Executor-local, not a driver collect.
-    if (stageEvery <= 0 && small && nDrop > 0) {
-      val nodeType = und.schema("s").dataType
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("core_degree",
-          org.apache.spark.sql.types.LongType)))
-      return und.select(col("s"), col("t")).coalesce(1)
-        .mapPartitions(it => localPeel(it, k, maxRounds))(
-          org.apache.spark.sql.Encoders.row(outSchema))
-    }
+    // oracle — agree bit for bit.
+    if (stageEvery <= 0 && nDrop > 0 && PathChoice.local(PathChoice.KCore,
+        edges.sparkSession, degSum / 2, PathChoice.KCoreLocalEdges))
+      return PathChoice.kernel(und.select(col("s"), col("t")),
+        new StructType().add("node", und.schema("s").dataType)
+          .add("core_degree", LongType))(
+        it => localPeel(it, k, maxRounds))
     val blockLen = if (stageEvery > 0) stageEvery else if (small) 2 else 1
     var done = 0
     // Probe-forced distributed runs on a small graph still drop the

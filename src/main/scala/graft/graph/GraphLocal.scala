@@ -16,9 +16,8 @@ import scala.collection.mutable
   *
   * The point is job count: a distributed iterative loop pays 1-2 Spark
   * jobs per round (propagate + stage write) — pure fixed overhead on a
-  * graph that fits one task's working set. At scale the size gate
-  * (staged-file bytes, driver metadata) fails and the distributed loops
-  * run unchanged.
+  * graph that fits one task's working set. [[graft.exec.PathChoice]]
+  * chooses between a kernel and its distributed loop.
   *
   * All kernels intern node ids to dense ints on ingest and run over
   * primitive arrays (CSR adjacency) — a boxed-HashMap formulation was
@@ -214,71 +213,6 @@ object GraphLocal {
     }
     (0 until n).iterator.filter(hopOf(_) >= 0)
       .map(id => Row(buf.in.value(id), hopOf(id)))
-  }
-
-  /** Ancestor-path closure over the parents-only table of
-    * [[graft.ops.Documents.resolvePaths]] — the single-task twin of its
-    * staged per-level walk. Input rows are (id, name, parent), all
-    * strings (the caller gates on StringType); output rows are
-    * (id, root-to-node path), one per input row per join branch, with
-    * the distributed loop's EXACT semantics:
-    *
-    *   - a row whose cursor is null/empty resolves immediately with
-    *     path = name;
-    *   - each level left-outer-joins the cursor against the parents'
-    *     ids: no match, or a match whose name is NULL, resolves with
-    *     the accumulated path (the `when(__pname.isNotNull, …)`
-    *     otherwise-branch); a match prepends `name + "/"` — with SQL
-    *     concat null semantics (null path stays null) — and walks to
-    *     that match's parent. Duplicate parent ids fan out one branch
-    *     per match, exactly like the join;
-    *   - after `maxDepth` levels a still-walking branch (a cycle)
-    *     resolves with its accumulated path.
-    *
-    * Each row's walk depends only on its own state plus the static
-    * lookup, so per-row iteration replays the distributed lockstep
-    * rounds bit for bit.
-    */
-  def localPaths(rows: Iterator[Row], maxDepth: Int): Iterator[Row] = {
-    def str(r: Row, i: Int): String = if (r.isNullAt(i)) null else r.getString(i)
-    val all = rows.toArray // bounded by the caller's byte gate
-    val lookup = new java.util.HashMap[String, mutable.ArrayBuffer[(String, String)]]()
-    all.foreach { r =>
-      val id = str(r, 0)
-      if (id != null) {
-        var buf = lookup.get(id)
-        if (buf == null) { buf = mutable.ArrayBuffer.empty; lookup.put(id, buf) }
-        buf += ((str(r, 1), str(r, 2)))
-      }
-    }
-    def hasCursor(c: String): Boolean = c != null && c.nonEmpty
-    val out = mutable.ArrayBuffer.empty[Row]
-    all.foreach { r =>
-      val id = str(r, 0)
-      var walking = mutable.ArrayBuffer.empty[(String, String)] // (path, cursor)
-      if (hasCursor(str(r, 2))) walking += ((str(r, 1), str(r, 2)))
-      else out += Row(id, str(r, 1))
-      var depth = 0
-      while (depth < maxDepth && walking.nonEmpty) {
-        val next = mutable.ArrayBuffer.empty[(String, String)]
-        walking.foreach { case (path, cursor) =>
-          val ms = lookup.get(cursor)
-          if (ms == null) out += Row(id, path)
-          else ms.foreach { case (pname, pparent) =>
-            if (pname == null) out += Row(id, path)
-            else {
-              val np = if (path == null) null else pname + "/" + path
-              if (hasCursor(pparent)) next += ((np, pparent))
-              else out += Row(id, np)
-            }
-          }
-        }
-        walking = next
-        depth += 1
-      }
-      walking.foreach { case (path, _) => out += Row(id, path) } // cycle budget
-    }
-    out.iterator
   }
 
   /** Integer-exact (personalized) PageRank over directed edge rows

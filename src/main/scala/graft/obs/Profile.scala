@@ -11,6 +11,8 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkLis
 import org.apache.spark.sql.graft.ListenerBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 
+import graft.exec.PathChoice
+
 /** What one recorded body cost, layer by layer (see [[Profile.record]];
   * the README's "Profiling" section lists every JSON field). Times are
   * seconds; `build_s + plan_s + exec_s` partitions `wall_s`: `plan_s` is
@@ -20,7 +22,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
   */
 final case class Profile(wallS: Double, buildS: Double, planS: Double, execS: Double,
     rows: Option[Long], jobs: Seq[Profile.Job], counts: ListMap[String, Long],
-    skips: Map[String, Long], stream: ListMap[String, Long]) {
+    skips: Map[String, Long], paths: Map[String, Long], stream: ListMap[String, Long]) {
 
   def json: String = {
     def f(v: Double): String = String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
@@ -33,6 +35,7 @@ final case class Profile(wallS: Double, buildS: Double, planS: Double, execS: Do
     s"""{"wall_s":${f(wallS)},"build_s":${f(buildS)},"plan_s":${f(planS)},""" +
       s""""exec_s":${f(execS)},"rows":${rows.getOrElse("null")},"jobs":${jobs.size},""" +
       s"""${fields(counts)},"skips":{${fields(skips.toSeq.sorted)}},""" +
+      s""""paths":{${fields(paths.toSeq.sorted)}},""" +
       s""""stream":{${fields(stream)}},"job_list":${jobList.mkString("[", ",", "]")}}"""
   }
 }
@@ -56,13 +59,17 @@ object Profile {
     val listener = new Recorder
     sc.addSparkListener(listener)
     try {
+      val paths0 = PathChoice.counts
       val t0Ms = System.currentTimeMillis()
       val t0 = System.nanoTime()
       val result = body
       val wallNs = System.nanoTime() - t0
       ListenerBridge.drain(sc)
       val rows = Some(result).collect { case n: Long => n }
-      (result, listener.profile(t0Ms, wallNs, rows))
+      val paths = PathChoice.counts.collect {
+        case (k, n) if n > paths0.getOrElse(k, 0L) => k -> (n - paths0.getOrElse(k, 0L))
+      }
+      (result, listener.profile(t0Ms, wallNs, rows, paths))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -143,7 +150,8 @@ object Profile {
       }
     }
 
-    def profile(t0Ms: Long, wallNs: Long, rows: Option[Long]): Profile = synchronized {
+    def profile(t0Ms: Long, wallNs: Long, rows: Option[Long],
+        paths: Map[String, Long]): Profile = synchronized {
       val wall = wallNs / 1e9
       val plan = actions.iterator.flatMap(_._2).map(_.durationMs).sum / 1e3
       val exec = actions.maxByOption(_._1).fold(0.0) { case (startMs, phases) =>
@@ -153,7 +161,7 @@ object Profile {
         math.min(math.max(0.0, s), math.max(0.0, wall - plan))
       }
       Profile(wall, math.max(0.0, wall - plan - exec), plan, exec, rows,
-        jobs.sortBy(_.id).toSeq, ListMap.from(counts), skips.toMap, ListMap.from(stream))
+        jobs.sortBy(_.id).toSeq, ListMap.from(counts), skips.toMap, paths, ListMap.from(stream))
     }
   }
 }

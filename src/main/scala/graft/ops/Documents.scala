@@ -366,32 +366,6 @@ object Documents {
     val lookup = parents.select(col("id").as("cursor"),
       col("name").as("__pname"), col("parent").as("__pparent"))
 
-    // Observed-small fast path (the graph operators' localBytes gate —
-    // same precedent as EntityGraph.expand): a document corpus's FOLDER
-    // set is tiny even when the corpus is not, and the per-level staged
-    // walk below pays 1-2 Spark jobs per directory level of pure fixed
-    // overhead. When the staged parents table measures small by
-    // driver-side file metadata (and all three columns are strings, so
-    // SQL equality/concat semantics map 1:1 onto the kernel), the whole
-    // ancestor closure collapses to ONE executor-local task
-    // (GraphLocal.localPaths — exact same fixpoint, spec-locked against
-    // the forced-distributed loop). The corpus-wide final join below is
-    // shared by both branches; at scale the byte gate fails and the
-    // staged loop runs unchanged.
-    val allStrings = Seq("id", "name", "parent").forall(
-      parents.schema(_).dataType == org.apache.spark.sql.types.StringType)
-    val ancLocal: Option[DataFrame] =
-      if (allStrings && graft.graph.EntityGraph.smallEnoughForLocal(Seq(parents))) {
-        val outSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("path",
-            org.apache.spark.sql.types.StringType)))
-        Some(parents.coalesce(1)
-          .mapPartitions(it => graft.graph.GraphLocal.localPaths(it, maxDepth))(
-            org.apache.spark.sql.Encoders.row(outSchema)))
-      } else None
-
     // close ancestor paths to the root over the parents-only table:
     // anc(id) = root-to-node path of that parent node. Per-iteration
     // state is re-staged so lineage stays one join deep; cycles stop
@@ -404,7 +378,7 @@ object Documents {
     // flat lineage, one parquet read each — unioned once at the end;
     // the walk count rides each stage write (observe), one job per
     // round, no standalone pre-loop jobs.
-    val anc = ancLocal.getOrElse {
+    val anc = {
       val resolvedParts = scala.collection.mutable.ListBuffer.empty[DataFrame]
       val initial = parents.select(
         col("id"), col("name").cast("string").as("path"), col("parent").as("cursor"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.dedupe.Dedupe
+import graft.exec.PathChoice
 import graft.multimodal.Multimodal
 import graft.similarity.Similarity
 import graft.text.TextFunctions
@@ -569,31 +570,19 @@ object TrainingData {
     // metrics (input-node count = before, output count = after), so a
     // round is exactly two jobs: top-pair aggregate + merge write.
     val t0 = posTokens(spark, dir)
-    // Observed-small fast path (the GraphLocal precedent): greedy BPE is
-    // inherently sequential per document, so when the staged token table
-    // measures small (exact file bytes — driver metadata, no job) BOTH
-    // rounds run as ONE executor-local task over interned-int token
-    // arrays ([[graft.text.Bpe.localSummary]] — exactness argument and
-    // the parity-rule equivalence there; locked by a forced-distributed
-    // spec and the tok2 oracle). At 100 TB the token stream dwarfs the
-    // gate and the staged rounds below run unchanged.
-    if (F.isPlainScan(t0) && graft.graph.EntityGraph.smallEnoughForLocal(
-        Seq(t0), "spark.graft.text.localBytes", 32L << 20)) {
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("round",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("pair",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_pair",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("n_merged",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("tokens_after",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      return t0.select(col("doc_id"), col("pos"), col("w"))
-        .coalesce(1)
-        .mapPartitions(it => graft.text.Bpe.localSummary(it, 2))(
-          org.apache.spark.sql.Encoders.row(outSchema))
+    // Local kernel (PathChoice.Bpe): greedy BPE is inherently sequential
+    // per document, so BOTH rounds can run as ONE executor-local task
+    // over interned-int token arrays ([[graft.text.Bpe.localSummary]] —
+    // exactness argument and the parity-rule equivalence there).
+    if (F.isPlainScan(t0) && PathChoice.local(PathChoice.Bpe,
+        Seq(t0), PathChoice.LocalBytes)) {
+      import org.apache.spark.sql.types._
+      return PathChoice.kernel(t0.select(col("doc_id"), col("pos"), col("w")),
+        new StructType().add("round", IntegerType, nullable = false)
+          .add("pair", StringType).add("n_pair", LongType, nullable = false)
+          .add("n_merged", LongType, nullable = false)
+          .add("tokens_after", LongType, nullable = false))(
+        it => graft.text.Bpe.localSummary(it, 2))
         .orderBy(col("round"))
     }
     def round(toks: DataFrame): (DataFrame, DataFrame, Long, Long) = {

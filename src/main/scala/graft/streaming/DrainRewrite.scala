@@ -19,9 +19,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Preconditions — all checked, fall back to the stateful plan
   * otherwise:
-  *  - rewrite enabled (`spark.graft.stream.drainRewrite`, default on;
-  *    read from the PARENT session so callers/tests toggle it without
-  *    reaching into the per-query session clone);
+  *  - the path is not forced (`spark.graft.path=distributed`, see
+  *    [[graft.exec.PathChoice]]; read from the PARENT session so
+  *    callers/tests force it without reaching into the per-query session
+  *    clone);
   *  - the checkpoint holds no Spark streaming state (`offsets/` empty or
   *    absent) — a checkpoint with prior progress belongs to Spark's own
   *    recovery rules, and a batch twin could double-emit what earlier
@@ -55,58 +56,38 @@ import org.apache.spark.sql.SparkSession
   */
 object DrainRewrite {
 
-  /** Parent-session conf key: `true` (default) enables the rewrite. */
-  val FlagKey = "spark.graft.stream.drainRewrite"
-
   private val MarkerName = "_graft_drain"
 
   sealed trait Decision
   /** Fresh checkpoint, single-batch drain: run the batch twin. */
   case object BatchDrain extends Decision
-  /** Rewrite disabled or Spark state present: run the stateful plan. */
+  /** Path forced or Spark state present: run the stateful plan. */
   case object Stateful extends Decision
 
   private def fs(ss: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(ss.sessionState.newHadoopConf())
 
-  /** Is the rewrite flag on in `parent`'s conf? Lenient boolean parse:
-    * Spark operators routinely write 1/0/on/off, and a misspelling must
-    * name the key instead of crashing opaquely (String.toBoolean) or
-    * silently picking a default. Public for callers whose drain guard is
-    * NOT a durable checkpoint — st9's one-shot twin runs under its own
-    * lake lock + exactly-once batch protocol, so it consults only the
-    * flag and never claims a marker (its checkpoint is a throwaway UUID
-    * no other run can observe).
-    */
-  def enabled(parent: SparkSession): Boolean =
-    parent.conf.get(FlagKey, "true").trim.toLowerCase match {
-      case "true" | "1" | "on" | "yes" => true
-      case "false" | "0" | "off" | "no" => false
-      case other => throw new IllegalArgumentException(
-        s"$FlagKey must be a boolean (true/false/1/0/on/off), got '$other'")
-    }
-
   /** Decide how to drain `checkpoint`. Throws on a marker-bearing
     * checkpoint (spent or concurrently claimed — see class doc). A
     * BatchDrain decision has already CLAIMED the marker atomically:
     * the caller must run the twin under [[runClaimed]] (commit on
-    * success, claim released on abort). `parent` is the caller's session (flag
-    * source); `ss` the per-query clone (filesystem conf).
+    * success, claim released on abort). `site` records the choice;
+    * `parent` is the caller's session (path source); `ss` the per-query
+    * clone (filesystem conf). Drains whose checkpoint is a throwaway UUID
+    * no other run can observe claim nothing and ask
+    * [[graft.exec.PathChoice.twin]] directly.
     */
-  def decide(parent: SparkSession, ss: SparkSession, checkpoint: String,
-      singleBatch: Boolean): Decision = {
+  def decide(site: graft.exec.PathChoice.Twin, parent: SparkSession,
+      ss: SparkSession, checkpoint: String, singleBatch: Boolean): Decision = {
     val root = new org.apache.hadoop.fs.Path(checkpoint)
     val f = fs(ss, root)
     val marker = new org.apache.hadoop.fs.Path(root, MarkerName)
     if (f.exists(marker)) throw spentOrClaimed(f, marker, checkpoint)
-    // lenient boolean parse: Spark operators routinely write 1/0/on/off,
-    // and a misspelling must name the key instead of crashing opaquely
-    // (String.toBoolean) or silently picking a default
     val offsets = new org.apache.hadoop.fs.Path(root, "offsets")
     val hasSparkState =
       try f.exists(offsets) && f.listStatus(offsets).nonEmpty
       catch { case _: java.io.FileNotFoundException => false }
-    if (enabled(parent) && singleBatch && !hasSparkState) {
+    if (singleBatch && !hasSparkState && graft.exec.PathChoice.twin(site, parent)) {
       // atomic claim: create-exclusive is the decide/commit race guard.
       // Two concurrent drains both reach this point having seen no
       // marker and no offsets; exactly one claim succeeds, the other
@@ -164,7 +145,8 @@ object DrainRewrite {
     if (!claimed) new IllegalStateException(
       s"checkpoint $checkpoint was drained by a batch rewrite and holds no " +
         "resumable stream state: use a fresh checkpoint (full recompute), or " +
-        s"disable $FlagKey from the FIRST run for an incrementally-resumable stream")
+        s"set ${graft.exec.PathChoice.Key}=distributed from the FIRST run for an " +
+        "incrementally-resumable stream")
     else new IllegalStateException(
       s"checkpoint $checkpoint carries an UNCOMMITTED drain claim ($MarkerName): " +
         "another drain is in flight, or a prior one crashed mid-twin. If no other " +

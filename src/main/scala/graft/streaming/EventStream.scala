@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.DecimalType
 
+import graft.exec.PathChoice
+
 /** Streaming operators over the events table: watermarked tumbling-window
   * aggregation (Structured Streaming), and sessionization both as a batch
   * gaps-and-islands computation and as a stateful
@@ -42,18 +44,19 @@ object EventStream {
     * source → watermark → windowed agg → memory sink, drained with
     * Trigger.AvailableNow. Returns the finished result as a DataFrame.
     *
-    * ONE-SHOT drains take the [[DrainRewrite]] fast path (same flag and
-    * preconditions as st5/sk3): a COMPLETE-mode aggregation drained from
-    * a fresh checkpoint in a single AvailableNow batch emits exactly the
+    * ONE-SHOT drains take the [[DrainRewrite]] fast path (same
+    * preconditions as st5/sk3; site [[PathChoice.WindowAgg]]): a
+    * COMPLETE-mode aggregation drained from a fresh checkpoint in a
+    * single AvailableNow batch emits exactly the
     * aggregation of that one batch — Complete mode outputs the full
     * state every batch, the single batch IS the whole table, and the
     * watermark never gates Complete output (it only evicts state after
     * emission). count is exact and the DECIMAL(18,2) sum is exact (order
     * never changes a decimal sum), so the twin is bit-identical. The
     * stateful plan below runs unchanged for resumable deployments (prior
-    * Spark state, rate-capped sources, or the flag off) — a drain there
-    * pays the per-batch state-store commit machinery the rewrite exists
-    * to skip.
+    * Spark state, rate-capped sources, or `spark.graft.path=distributed`)
+    * — a drain there pays the per-batch state-store commit machinery the
+    * rewrite exists to skip.
     */
   def windowAggStreaming(spark: SparkSession, dir: String): DataFrame = {
     val project = (df: DataFrame) =>
@@ -61,12 +64,12 @@ object EventStream {
         col("n"), col("total"))
     // the checkpoint below is a THROWAWAY UUID no other run can observe,
     // so there is no marker to claim/commit and nothing durable is
-    // emitted (the st9 precedent): the flag alone picks the plan, and
+    // emitted (the st9 precedent): PathChoice alone picks the plan, and
     // the twin returns lazily — recompute is pure. The twin plans on the
     // PARENT session (cached table schema, no clone): a batch aggregate
     // needs no state-store sizing. The uncapped file source drains in
     // one batch (the singleBatch precondition).
-    if (DrainRewrite.enabled(spark))
+    if (PathChoice.twin(PathChoice.WindowAgg, spark))
       return project(windowAggOf(graft.Tables.events(spark, dir)))
     // state partitioning sized to KEY cardinality (windows × event types
     // — dozens) on a query-scoped session clone, never by mutating the
@@ -126,10 +129,10 @@ object EventStream {
     // the Complete-mode aggregate over a fresh-checkpoint single-batch
     // drain equals the batch aggregate exactly (the one batch is the
     // whole table; count and the decimal sum are order-exact). The
-    // checkpoint below is a throwaway UUID (st9 precedent: flag-only
+    // checkpoint below is a throwaway UUID (st9 precedent: PathChoice-only
     // gate, no marker, lazy twin on the PARENT session — cached schemas,
     // no clone); the uncapped file source drains in one batch.
-    if (DrainRewrite.enabled(spark))
+    if (PathChoice.twin(PathChoice.StreamStatic, spark))
       return enrichAggOf(spark, graft.Tables.events(spark, dir))
     val ss = StreamConf.streamSession(spark)
     val batch = ss.read.parquet(s"$dir/events.parquet")
@@ -182,8 +185,8 @@ object EventStream {
     * result is deterministic and oracle-checkable against the batch SQL
     * interval join.
     *
-    * ONE-SHOT drains take the [[DrainRewrite]] fast path (default-on,
-    * `spark.graft.stream.drainRewrite`): a fresh-checkpoint single-batch
+    * ONE-SHOT drains take the [[DrainRewrite]] fast path (site
+    * [[PathChoice.IntervalJoin]]): a fresh-checkpoint single-batch
     * AvailableNow drain of an INNER join equals the batch join exactly
     * (every match forms inside the one batch; the watermark only evicts
     * state afterwards), and the stream block of the profile record
@@ -191,8 +194,8 @@ object EventStream {
     * of the full in-window set — buffering 1 GB of rows to read them
     * back once. The rewrite runs the same projections/condition over the
     * batch read, materializes, and marks the checkpoint spent; resumable
-    * deployments (prior Spark state, rate-capped sources, or the flag
-    * off) keep the stateful plan below.
+    * deployments (prior Spark state, rate-capped sources, or
+    * `spark.graft.path=distributed`) keep the stateful plan below.
     */
   def intervalJoinStreaming(spark: SparkSession, dir: String,
       checkpoint: Option[String] = None): DataFrame = {
@@ -206,7 +209,7 @@ object EventStream {
     // the file source below sets no maxFilesPerTrigger/maxBytesPerTrigger,
     // so AvailableNow drains it in ONE data batch — the singleBatch
     // precondition the rewrite's exactness argument needs
-    DrainRewrite.decide(spark, ss, ckpt, singleBatch = true) match {
+    DrainRewrite.decide(PathChoice.IntervalJoin, spark, ss, ckpt, singleBatch = true) match {
       case DrainRewrite.BatchDrain =>
         return DrainRewrite.runClaimed(ss, ckpt, s"$dir/events.parquet") {
           val ev = graft.Tables.normalizeTs(batch)
@@ -352,11 +355,12 @@ object EventStream {
     // [[closedSessionsBatch]] for the exactness argument. The stateful
     // drain's cost at scale is the per-user state-store insert of the
     // full user set, read back once — the same pure-drain waste st5's
-    // rewrite removes. Resumable deployments (flag off) keep the
-    // stateful plan. Throwaway UUID checkpoint (st9 precedent: flag-only
-    // gate, no marker, lazy twin on the PARENT session); uncapped file
-    // source ⇒ one data batch.
-    if (DrainRewrite.enabled(spark))
+    // rewrite removes. Resumable deployments
+    // (`spark.graft.path=distributed`) keep the stateful plan. Throwaway
+    // UUID checkpoint (st9 precedent: PathChoice-only gate, no marker,
+    // lazy twin on the PARENT session); uncapped file source ⇒ one data
+    // batch.
+    if (PathChoice.twin(PathChoice.Sessionize, spark))
       return closedSessionsBatch(graft.Tables.events(spark, dir), gapMinutes)
     // per-user session state: user cardinality grows with the corpus
     val ss = StreamConf.streamSessionFor(spark, dir)
@@ -471,9 +475,9 @@ object EventStream {
     // ONE-SHOT drains take the [[DrainRewrite]] fast path: see
     // [[timedOutSessionsBatch]] for the exactness argument. Same scale
     // rationale as st6 above; throwaway UUID checkpoint (st9 precedent:
-    // flag-only gate, no marker, lazy twin on the PARENT session);
+    // PathChoice-only gate, no marker, lazy twin on the PARENT session);
     // uncapped file source ⇒ one data batch.
-    if (DrainRewrite.enabled(spark))
+    if (PathChoice.twin(PathChoice.SessionTimeout, spark))
       return timedOutSessionsBatch(graft.Tables.events(spark, dir), gapMinutes)
     val ss = StreamConf.streamSessionFor(spark, dir)
     import ss.implicits._

@@ -107,8 +107,9 @@ object NearDupStream {
   /** Drain `docs` through the near-dup gate. `batchTwin` is the batch
     * read of the same source — supplied by callers whose feed drains in
     * ONE AvailableNow batch (uncapped source); when present and the
-    * [[DrainRewrite]] flag allows, the drain executes [[processBatch]]
-    * directly on it instead of spinning up a stream.
+    * [[graft.exec.PathChoice.NearDup]] site chooses the twin, the drain
+    * executes [[processBatch]] directly on it instead of spinning up a
+    * stream.
     */
   def run(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
       stateDir: String, outDir: String,
@@ -120,12 +121,13 @@ object NearDupStream {
     graft.lake.FsOps.mkdirs(fs, statePath)
     graft.lake.Locks.withLock(fs, statePath) {
     ExactlyOnceBatches.reconcile(spark, stateDir, outDir)
-    // the twin path consults only the FLAG — no checkpoint marker
+    // the twin path consults only PathChoice — no checkpoint marker
     // protocol. The checkpoint here is a throwaway per-run UUID nobody
     // else can observe, so a claim would protect nothing: double-drain
     // safety is the lake lock above (one drain per state dir at a time)
     // and torn-batch safety is ExactlyOnceBatches' reconcile/commit.
-    val twin = batchTwin.filter(_ => DrainRewrite.enabled(spark))
+    val twin = batchTwin.filter(_ =>
+      graft.exec.PathChoice.twin(graft.exec.PathChoice.NearDup, spark))
     twin match {
       case Some(batch) =>
         // same function, same batch key as the stream's first batch,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
+import graft.exec.PathChoice
 import graft.sketch.Sketches
 
 /** Streaming count-min sketch maintenance: the heavy-hitter estimator of
@@ -77,10 +78,10 @@ object SketchStream {
     // makes the twin trivially exact: the single batch IS the table, so
     // its cell counts equal the batch build bit for bit, with no
     // staging write or compaction read-back. Throwaway UUID checkpoint
-    // (st9 precedent: flag-only gate, no marker, lazy twin on the
+    // (st9 precedent: PathChoice-only gate, no marker, lazy twin on the
     // PARENT session — cached schema, no clone); the uncapped file
     // source drains in one batch (the singleBatch precondition).
-    if (DrainRewrite.enabled(spark))
+    if (PathChoice.twin(PathChoice.CountMin, spark))
       return cmsCells(graft.Tables.events(spark, dir), width)
     // the per-batch pre-count shuffles by user_id — size it to the source
     val ss = StreamConf.streamSessionFor(spark, dir)
@@ -135,10 +136,10 @@ object SketchStream {
     // order-exact; max's duplicate-insensitivity is what made the
     // streaming form stateless-safe in the first place). The stateful
     // plan below runs unchanged for resumable deployments. Throwaway
-    // UUID checkpoint (st9 precedent: flag-only gate, no marker, lazy
+    // UUID checkpoint (st9 precedent: PathChoice-only gate, no marker, lazy
     // twin on the PARENT session); the uncapped file source drains in
     // one batch (singleBatch).
-    if (DrainRewrite.enabled(spark))
+    if (PathChoice.twin(PathChoice.Hll, spark))
       return Sketches.hllRegisters(
         graft.Tables.events(spark, dir)
           .select(col("event_type"), col("user_id").cast("string").as("uid")),

@@ -103,8 +103,8 @@ object Bpe {
     * is inherently sequential per document, so one task over the staged
     * token table replaces 2 staged-write jobs + ~10 window passes per
     * round with one in-memory scan). Runs inside `mapPartitions` over a
-    * `coalesce(1)` of the staged (doc_id, pos, w) table; at scale the
-    * byte gate fails and the distributed rounds run unchanged.
+    * `coalesce(1)` of the staged (doc_id, pos, w) table, when
+    * [[graft.exec.PathChoice]] chooses it over the distributed rounds.
     *
     * Exactness — replays the distributed semantics bit for bit:
     *   - pair counts: adjacent (w, next) within a doc ordered by pos,

@@ -212,47 +212,6 @@ class ArchivePlanSpec extends SparkSpec {
     assert(paths.contains("x"))
   }
 
-  test("resolvePaths local fast path == forced-distributed staged walk") {
-    import spark.implicits._
-    // every branch the two implementations must agree on: a plain tree,
-    // a 2-cycle, a chain DEEPER than the hop budget (partial path), a
-    // duplicated parent id (join fan-out), a null parent NAME (the
-    // when(__pname.isNotNull) otherwise-branch on a matched row), a
-    // dangling parent reference, and a null leaf name (concat null
-    // propagation)
-    val chain = (0 until 12).map(i =>
-      (s"h$i", s"n$i", if (i == 11) "" else s"h${i + 1}"))
-    val nodes = (Seq(
-      ("root", "top", ""),
-      ("mid", "docs", "root"),
-      ("leaf", "report.pdf", "mid"),
-      ("x", "a", "y"), ("y", "b", "x"), // cycle
-      ("dup", "d1", "root"), ("dup", "d2", "root"), // duplicate parent id
-      ("under-dup", "f.txt", "dup"),
-      ("nn", null, "root"), ("under-nn", "g.txt", "nn"), // null parent name
-      ("dangle", "h.txt", "ghost"), // parent id that exists nowhere
-      ("nulleaf", null, "mid") // null name, real chain
-    ) ++ chain).toDF("id", "name", "parent")
-    def run(maxDepth: Int) = graft.ops.Documents
-      .resolvePaths(nodes, maxDepth)
-      .collect().map(r => (r.getString(0), Option(r.getString(1)))).toSeq
-      .groupBy(identity).view.mapValues(_.size).toMap // multiset compare
-    // restore the EXACT pre-test conf (unset if absent): suites share one
-    // JVM-wide session, so restoring a hard-coded default could clobber a
-    // concurrent suite's override
-    val prevGate = spark.conf.getOption("spark.graft.graph.localBytes")
-    def restoreGate(): Unit = prevGate match {
-      case Some(v) => spark.conf.set("spark.graft.graph.localBytes", v)
-      case None => spark.conf.unset("spark.graft.graph.localBytes")
-    }
-    for (d <- Seq(4, 8, 32)) {
-      val local = run(d)
-      spark.conf.set("spark.graft.graph.localBytes", "0")
-      val dist = try run(d) finally restoreGate()
-      assert(local === dist, s"maxDepth=$d")
-    }
-  }
-
   // ---- physical-plan shape assertions (the explain audit, executable) ----
 
   private def plan(name: String): String =

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.SparkSpec.forcedDistributed
 import graft.graph.EntityGraph
 
 /** Entity-graph analytics: degree, bounded-hop expand (min-hop BFS),
@@ -144,15 +145,6 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  // force the distributed branch of the observed-small fast paths by
-  // zeroing the byte gate, restore after — the local/distributed pairs
-  // must agree bit for bit (GraphLocal's contract)
-  private def forcedDistributed[A](body: => A): A = {
-    spark.conf.set("spark.graft.graph.localBytes", "0")
-    try body finally spark.conf.set("spark.graft.graph.localBytes",
-      (32L << 20).toString)
-  }
-
   private def pseudoRandomEdges(n: Int, nodes: Int, seed: Int = 7) = {
     val rnd = new scala.util.Random(seed)
     (1 to n).map { _ =>
@@ -167,7 +159,7 @@ class GraphSpec extends SparkSpec {
       d.collect().map(r => (r.getString(0), r.getInt(1))).toSet
     for (hops <- Seq(0, 1, 3)) {
       val local = run(EntityGraph.expand(e, seeds, hops))
-      val dist = forcedDistributed(run(EntityGraph.expand(e, seeds, hops)))
+      val dist = forcedDistributed(spark)(run(EntityGraph.expand(e, seeds, hops)))
       assert(local === dist, s"maxHops=$hops")
     }
   }
@@ -178,11 +170,11 @@ class GraphSpec extends SparkSpec {
     def m(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val prLocal = m(EntityGraph.pageRank(e, iters = 3))
-    val prDist = forcedDistributed(m(EntityGraph.pageRank(e, iters = 3)))
+    val prDist = forcedDistributed(spark)(m(EntityGraph.pageRank(e, iters = 3)))
     assert(prLocal === prDist)
     val pprLocal = m(EntityGraph.personalizedPageRank(e, seeds, iters = 3))
     val pprDist =
-      forcedDistributed(m(EntityGraph.personalizedPageRank(e, seeds, iters = 3)))
+      forcedDistributed(spark)(m(EntityGraph.personalizedPageRank(e, seeds, iters = 3)))
     assert(pprLocal === pprDist)
   }
 
@@ -197,7 +189,7 @@ class GraphSpec extends SparkSpec {
     def run(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getString(0), r.getString(1))).toSet
     val local = run(graft.dedupe.Dedupe.dupClusters(pairs))
-    val dist = forcedDistributed(run(graft.dedupe.Dedupe.dupClusters(pairs)))
+    val dist = forcedDistributed(spark)(run(graft.dedupe.Dedupe.dupClusters(pairs)))
     assert(local === dist)
     assert(local.filter(_._1.startsWith("c")).map(_._2) === Set("c000"))
   }
@@ -211,7 +203,7 @@ class GraphSpec extends SparkSpec {
     def run(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getString(0), r.getString(1))).toSet
     val local = run(graft.dedupe.Dedupe.dupClusters(pairs))
-    val dist = forcedDistributed(run(graft.dedupe.Dedupe.dupClusters(pairs)))
+    val dist = forcedDistributed(spark)(run(graft.dedupe.Dedupe.dupClusters(pairs)))
     assert(local === dist)
     assert(local.forall(_._2 == "�"))
   }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.graft.{ListenerBridge, TestBus}
 
 import graft.obs.Profile
-import graft.streaming.DrainRewrite
 
 /** The per-query recorder [[Profile.record]] that graft.Bench wraps around
   * every sample: engine counters, the build/plan/exec split, the stream
@@ -14,11 +13,12 @@ class ProfileSpec extends SparkSpec {
   private def query(name: String): org.apache.spark.sql.DataFrame =
     SparkEntry.queries(name)(spark, sf001)
 
-  private def st5(drainRewrite: Boolean): Profile = {
-    spark.conf.set(DrainRewrite.FlagKey, drainRewrite.toString)
-    try Profile.record(spark)(query("st5_interval_join").count())._2
-    finally spark.conf.unset(DrainRewrite.FlagKey)
-  }
+  private def record(name: String): Profile =
+    Profile.record(spark)(query(name).count())._2
+
+  private def st5(drainRewrite: Boolean): Profile =
+    if (drainRewrite) record("st5_interval_join")
+    else SparkSpec.forcedDistributed(spark)(record("st5_interval_join"))
 
   test("a shuffling registry query: counts, rows and a wall-time split") {
     val t0 = System.nanoTime()
@@ -45,6 +45,25 @@ class ProfileSpec extends SparkSpec {
     val p = st5(drainRewrite = true)
     assert(p.stream.isEmpty, p.json)
     assert(p.rows.exists(_ > 0) && p.jobs.nonEmpty, p.json)
+  }
+
+  test("paths: gr4 records its local kernel, or the distributed loop when forced") {
+    assert(record("gr4_components").paths == Map("components.local" -> 1L))
+    assert(SparkSpec.forcedDistributed(spark)(record("gr4_components")).paths ==
+      Map("components.distributed" -> 1L))
+  }
+
+  test("paths: st5 records its batch twin, or the stateful drain when forced") {
+    assert(st5(drainRewrite = true).paths == Map("interval_join.twin" -> 1L))
+    val forced = st5(drainRewrite = false)
+    assert(forced.paths == Map("interval_join.stateful" -> 1L), forced.json)
+    assert(forced.json.contains("\"paths\":{\"interval_join.stateful\":1}"), forced.json)
+  }
+
+  test("paths: a query with no gate records none") {
+    val p = record("q1_agg")
+    assert(p.paths.isEmpty)
+    assert(p.json.contains("\"paths\":{}"), p.json)
   }
 
   test("repeated records attach no listeners and carry no state over") {

@@ -17,4 +17,19 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body` with every [[graft.exec.PathChoice]] site forced to its
+    * distributed or stateful side, then restores the exact prior value
+    * of the key (unset if it was absent): suites share one JVM-wide
+    * session, so restoring a default could clobber another's setting.
+    */
+  def forcedDistributed[A](spark: SparkSession)(body: => A): A = {
+    val key = graft.exec.PathChoice.Key
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "distributed")
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -281,10 +281,8 @@ class TrainingDataSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 41 && got.values.forall(_ == 0L), got)
     // the cap/convergence surface belongs to the DISTRIBUTED branch (the
-    // observed-small local union-find always converges) — force it by
-    // zeroing the fast-path byte gate
-    spark.conf.set("spark.graft.graph.localBytes", "0")
-    try {
+    // local union-find always converges) — force it
+    SparkSpec.forcedDistributed(spark) {
       val distGot = Dedupe.dupClusters(chain).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(distGot === got) // the two branches agree at the fixpoint
@@ -298,8 +296,7 @@ class TrainingDataSpec extends SparkSpec {
         failOnNonConvergence = false).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(partial(40L) > 0L) // far end provably not yet at the fixpoint
-    } finally spark.conf.set("spark.graft.graph.localBytes",
-      (32L << 20).toString)
+    }
   }
 
   test("TokenHash: fused kernel equals the conv(substring(md5)) recipe on both eval paths") {

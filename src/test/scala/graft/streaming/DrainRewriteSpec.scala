@@ -7,11 +7,9 @@ package graft.streaming
   * checkpoint must never silently re-emit.
   */
 class DrainRewriteSpec extends graft.SparkSpec {
+  import graft.SparkSpec.forcedDistributed
+  import graft.exec.PathChoice.IntervalJoin
 
-  private def flagOff[A](body: => A): A = {
-    spark.conf.set(DrainRewrite.FlagKey, "false")
-    try body finally spark.conf.unset(DrainRewrite.FlagKey)
-  }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Long)] =
     df.collect()
@@ -20,7 +18,7 @@ class DrainRewriteSpec extends graft.SparkSpec {
 
   test("st5 rewrite drain equals the stateful drain exactly") {
     val fast = rows(EventStream.intervalJoinStreaming(spark, sf001))
-    val slow = rows(flagOff(EventStream.intervalJoinStreaming(spark, sf001)))
+    val slow = rows(forcedDistributed(spark)(EventStream.intervalJoinStreaming(spark, sf001)))
     assert(fast.nonEmpty)
     assert(fast == slow)
   }
@@ -38,7 +36,8 @@ class DrainRewriteSpec extends graft.SparkSpec {
           case l: Long => l
         })) match { case Seq(a, b, c) => (a, b, c) }).sorted.toSeq)
     val (fastSchema, fast) = cells(SketchStream.countMinStreaming(spark, sf001))
-    val (slowSchema, slow) = cells(flagOff(SketchStream.countMinStreaming(spark, sf001)))
+    val (slowSchema, slow) =
+      cells(forcedDistributed(spark)(SketchStream.countMinStreaming(spark, sf001)))
     assert(fast.nonEmpty)
     assert(fast == slow)
     assert(fastSchema == slowSchema)
@@ -60,28 +59,28 @@ class DrainRewriteSpec extends graft.SparkSpec {
 
   test("st0 rewrite drain equals the stateful Complete-mode window agg exactly") {
     assertSameDrain(EventStream.windowAggStreaming(spark, sf001),
-      flagOff(EventStream.windowAggStreaming(spark, sf001)))
+      forcedDistributed(spark)(EventStream.windowAggStreaming(spark, sf001)))
   }
 
   test("st8 rewrite drain equals the stateful enrichment drain exactly") {
     assertSameDrain(EventStream.streamStaticEnrich(spark, sf001),
-      flagOff(EventStream.streamStaticEnrich(spark, sf001)))
+      forcedDistributed(spark)(EventStream.streamStaticEnrich(spark, sf001)))
   }
 
   test("sk5 rewrite drain equals the stateful HLL register drain exactly") {
     assertSameDrain(SketchStream.hllStreaming(spark, sf001),
-      flagOff(SketchStream.hllStreaming(spark, sf001)))
+      forcedDistributed(spark)(SketchStream.hllStreaming(spark, sf001)))
   }
 
   test("st6 rewrite drain equals the stateful sessionizer exactly") {
     assertSameDrain(EventStream.sessionizeStreamingFromDir(spark, sf001, 30),
-      flagOff(EventStream.sessionizeStreamingFromDir(spark, sf001, 30)))
+      forcedDistributed(spark)(EventStream.sessionizeStreamingFromDir(spark, sf001, 30)))
   }
 
   test("st7 rewrite drain equals the stateful event-time-timeout sessionizer exactly") {
     assertSameDrain(
       EventStream.sessionizeStreamingEventTimeFromDir(spark, sf001, 30),
-      flagOff(EventStream.sessionizeStreamingEventTimeFromDir(spark, sf001, 30)))
+      forcedDistributed(spark)(EventStream.sessionizeStreamingEventTimeFromDir(spark, sf001, 30)))
   }
 
   test("st6/st7 twins match the stateful drains on adversarial session shapes") {
@@ -121,10 +120,10 @@ class DrainRewriteSpec extends graft.SparkSpec {
     java.nio.file.Files.move(part.toPath,
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     assertSameDrain(EventStream.sessionizeStreamingFromDir(spark, dir, 30),
-      flagOff(EventStream.sessionizeStreamingFromDir(spark, dir, 30)))
+      forcedDistributed(spark)(EventStream.sessionizeStreamingFromDir(spark, dir, 30)))
     assertSameDrain(
       EventStream.sessionizeStreamingEventTimeFromDir(spark, dir, 30),
-      flagOff(EventStream.sessionizeStreamingEventTimeFromDir(spark, dir, 30)))
+      forcedDistributed(spark)(EventStream.sessionizeStreamingEventTimeFromDir(spark, dir, 30)))
   }
 
   test("a rewritten checkpoint is spent: reruns fail loudly, never re-emit") {
@@ -136,7 +135,7 @@ class DrainRewriteSpec extends graft.SparkSpec {
     intercept[IllegalStateException](
       EventStream.intervalJoinStreaming(spark, sf001, Some(ckpt)))
     intercept[IllegalStateException](
-      flagOff(EventStream.intervalJoinStreaming(spark, sf001, Some(ckpt))))
+      forcedDistributed(spark)(EventStream.intervalJoinStreaming(spark, sf001, Some(ckpt))))
   }
 
   test("prior Spark stream state and rate-capped sources take the stateful plan") {
@@ -144,8 +143,8 @@ class DrainRewriteSpec extends graft.SparkSpec {
     // and Spark's native exactly-once resume owns the checkpoint
     val ckpt = java.nio.file.Files.createTempDirectory("graft-drain-stateful")
       .toAbsolutePath.toString + "/c1"
-    flagOff(EventStream.intervalJoinStreaming(spark, sf001, Some(ckpt))).count()
-    assert(DrainRewrite.decide(spark, spark, ckpt, singleBatch = true) ==
+    forcedDistributed(spark)(EventStream.intervalJoinStreaming(spark, sf001, Some(ckpt))).count()
+    assert(DrainRewrite.decide(IntervalJoin, spark, spark, ckpt, singleBatch = true) ==
       DrainRewrite.Stateful)
     // ...and that route hands the checkpoint to Spark's own recovery
     // rules, which for the drains' append-mode MEMORY sink means Spark
@@ -158,14 +157,15 @@ class DrainRewriteSpec extends graft.SparkSpec {
     // so the drain is NOT the batch join
     val fresh = java.nio.file.Files.createTempDirectory("graft-drain-fresh")
       .toAbsolutePath.toString + "/c1"
-    assert(DrainRewrite.decide(spark, spark, fresh, singleBatch = false) ==
+    assert(DrainRewrite.decide(IntervalJoin, spark, spark, fresh, singleBatch = false) ==
       DrainRewrite.Stateful)
-    // the flag read comes from the PARENT session, so callers/tests can
+    // the path key is read from the PARENT session, so callers/tests can
     // toggle it without reaching into the per-query session clone —
     // neither path above CLAIMED the checkpoint, so it is still fresh
-    assert(flagOff(DrainRewrite.decide(spark, spark, fresh, singleBatch = true)) ==
+    assert(forcedDistributed(spark)(
+      DrainRewrite.decide(IntervalJoin, spark, spark, fresh, singleBatch = true)) ==
       DrainRewrite.Stateful)
-    assert(DrainRewrite.decide(spark, spark, fresh, singleBatch = true) ==
+    assert(DrainRewrite.decide(IntervalJoin, spark, spark, fresh, singleBatch = true) ==
       DrainRewrite.BatchDrain)
   }
 
@@ -189,10 +189,10 @@ class DrainRewriteSpec extends graft.SparkSpec {
         spark.readStream.schema(schema).parquet(feed), "doc_id", "text",
         s"$base/$tag/state", s"$base/$tag/out",
         batchTwin = Some(spark.read.parquet(feed)))
-    // flag on → twin path; flag off → the stateful stream even though a
-    // twin was offered (the flag is the operator's escape hatch)
+    // auto → twin path; forced distributed → the stateful stream even
+    // though a twin was offered (the key is the operator's escape hatch)
     val nTwin = runTo("twin")
-    val nSlow = flagOff(runTo("slow"))
+    val nSlow = forcedDistributed(spark)(runTo("slow"))
     assert(nTwin == 2 && nSlow == 2)
     def outSet(tag: String) = spark.read.parquet(s"$base/$tag/out")
       .select("doc_id").as[Long].collect().toSet
@@ -221,25 +221,26 @@ class DrainRewriteSpec extends graft.SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-drain-claim")
       .toAbsolutePath.toString + "/c1"
     // first decide wins the claim...
-    assert(DrainRewrite.decide(spark, spark, ckpt, singleBatch = true) ==
+    assert(DrainRewrite.decide(IntervalJoin, spark, spark, ckpt, singleBatch = true) ==
       DrainRewrite.BatchDrain)
     // ...so a second drain racing on the same checkpoint (it too saw no
     // offsets) fails loudly instead of emitting a second copy — and the
     // message distinguishes the uncommitted claim (delete-to-retry) from
     // a spent checkpoint (never delete)
     val raced = intercept[IllegalStateException](
-      DrainRewrite.decide(spark, spark, ckpt, singleBatch = true))
+      DrainRewrite.decide(IntervalJoin, spark, spark, ckpt, singleBatch = true))
     assert(raced.getMessage.contains("UNCOMMITTED drain claim"))
     // the stateful route refuses it too: the claim means a twin may be
     // mid-flight, so no plan may touch the checkpoint
     val statefulRaced = intercept[IllegalStateException](
-      flagOff(DrainRewrite.decide(spark, spark, ckpt, singleBatch = true)))
+      forcedDistributed(spark)(
+        DrainRewrite.decide(IntervalJoin, spark, spark, ckpt, singleBatch = true)))
     assert(statefulRaced.getMessage.contains("UNCOMMITTED drain claim"))
     // commit finalizes the claim: reruns now get the SPENT message (no
     // delete-to-retry — the drained rows were emitted)
     DrainRewrite.commit(spark, ckpt, "spec-fingerprint")
     val spent = intercept[IllegalStateException](
-      DrainRewrite.decide(spark, spark, ckpt, singleBatch = true))
+      DrainRewrite.decide(IntervalJoin, spark, spark, ckpt, singleBatch = true))
     assert(spent.getMessage.contains("holds no resumable stream state"))
     // legacy markers (pre-claim format, no state field) are committed
     // drains — they must never be told delete-to-retry
@@ -248,14 +249,14 @@ class DrainRewriteSpec extends graft.SparkSpec {
     java.nio.file.Files.write(legacy.resolve("_graft_drain"),
       "{\"drained_by\":\"batch-rewrite\",\"source\":\"x\"}\n".getBytes("UTF-8"))
     val old = intercept[IllegalStateException](
-      DrainRewrite.decide(spark, spark, legacy.toString, singleBatch = true))
+      DrainRewrite.decide(IntervalJoin, spark, spark, legacy.toString, singleBatch = true))
     assert(old.getMessage.contains("holds no resumable stream state"))
   }
 
   test("a twin failure under runClaimed releases the claim — the retry drains cleanly") {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-drain-abort")
       .toAbsolutePath.toString + "/c1"
-    assert(DrainRewrite.decide(spark, spark, ckpt, singleBatch = true) ==
+    assert(DrainRewrite.decide(IntervalJoin, spark, spark, ckpt, singleBatch = true) ==
       DrainRewrite.BatchDrain)
     // transient twin failure (executor loss, disk full): the claim must
     // not survive it, or the checkpoint is bricked behind delete-to-retry
@@ -266,12 +267,12 @@ class DrainRewriteSpec extends graft.SparkSpec {
       })
     assert(boom.getMessage.contains("twin lost an executor"))
     // the retry decides cleanly (no marker left), runs, and commits
-    assert(DrainRewrite.decide(spark, spark, ckpt, singleBatch = true) ==
+    assert(DrainRewrite.decide(IntervalJoin, spark, spark, ckpt, singleBatch = true) ==
       DrainRewrite.BatchDrain)
     assert(DrainRewrite.runClaimed(spark, ckpt, "fp") { 42 } == 42)
     // ...after which the checkpoint is SPENT as usual
     val spent = intercept[IllegalStateException](
-      DrainRewrite.decide(spark, spark, ckpt, singleBatch = true))
+      DrainRewrite.decide(IntervalJoin, spark, spark, ckpt, singleBatch = true))
     assert(spent.getMessage.contains("holds no resumable stream state"))
   }
 }

@@ -119,14 +119,14 @@ out = {
         'st5/sk3 are streaming drains whose batch twins (rj1/aj1, sk1) '
         'are IN this query set, so the parity claim is measured per '
         'factor. One-shot drains take the DrainRewrite fast path (round '
-        '13; graft.streaming.DrainRewrite, default-on, '
-        'spark.graft.stream.drainRewrite): a fresh-checkpoint '
+        '13; graft.streaming.DrainRewrite, chosen by '
+        'graft.exec.PathChoice): a fresh-checkpoint '
         'SINGLE-batch AvailableNow drain of an inner stream-stream join '
         '(or a linear sketch aggregate) provably equals its batch twin, '
         'so the drain executes the batch plan and marks the checkpoint '
         'spent; prior Spark state, rate-capped multi-batch sources, or '
-        'the flag off keep the stateful plan, whose exactly-once resume '
-        'is untouched and spec-gated for row+schema equality with the '
+        'spark.graft.path=distributed keep the stateful plan, whose '
+        'exactly-once resume is untouched and spec-gated for row+schema equality with the '
         'rewrite. Round 14 measurements: at x100 st5 runs 1.99 s wall, '
         'INSIDE batch twin rj1\'s band (2.13 s, 0.30x), and sk3 runs '
         '2.42 s, FASTER than batch twin sk1 (2.76 s, 1.44x). The '
@@ -136,7 +136,7 @@ out = {
         'take 7.2 s / 1.9 s for the same-band Spark work. The stateful '
         'floor for resumable deployments stays metrics-documented in the '
         'stream block of each query\'s profile record (BENCH_full.json '
-        '"profile", run with spark.graft.stream.drainRewrite=false).'),
+        '"profile", run with spark.graft.path=distributed).'),
     'merge_form_note': (
         'ROUND 14: A1 merge is deliberately the one-pass WINDOW form. '
         'The skew-safe aggregation alternative (per-id min_by + '
